@@ -321,10 +321,12 @@ def q_cdc_rebucket(spark, sf_dir):
 
 def q_cdc_changelog(spark, sf_dir):
     """Incremental changelog (CDF) semantics as a bounded query: diff the
-    merged state before/after the second half of the stream — the same
-    slim-classification sort-free plan IceTable.changes() runs between
-    committed versions (lake/table.py::changelog_diff; version-level
-    bucket pruning is exercised in test_cdc_round2)."""
+    merged state before/after the second half of the stream with
+    lake/table.py::changelog_diff, the slim-classification plan over two
+    materialized states. IceTable.changes() yields the same rows between
+    committed versions without materializing either state: it runs one
+    aggregate over the churned buckets' row versions (tests/test_changes.py
+    pins both, and the bucket pruning)."""
     ev = _events(spark, sf_dir)
     split = F.col("event_id") < 5000
     # the two state tables are each read by multiple diff branches (the

@@ -39,8 +39,8 @@ Guarantees (the Iceberg subset the north rule uses):
 * **merge-on-read MERGE** (``write_mode='mor'``) — each merge appends
   per-bucket DELTA files (payload + ``__op``, deletes as tombstones);
   write cost ∝ batch changes, independent of table size. Readers merge
-  base+deltas with the same hash-agg-max dedup the CDC path uses (the
-  ``seq`` column from the spec orders versions). Buckets whose delta
+  base+deltas with one latest-version aggregate per key (the ``seq``
+  column from the spec orders versions). Buckets whose delta
   chain exceeds ``compact_threshold`` are compacted back to base files
   inside the same commit (adaptive per-bucket copy-on-write), bounding
   read amplification. The right mode for high-churn CDC: COW rewrites
@@ -286,13 +286,7 @@ def _bucket_closure(files: list, buckets: set, m: int, default_n: int) -> set:
         out |= cov
 
 
-def changelog_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key: str,
-    seq: str,
-    broadcast_keys: bool = True,
-) -> DataFrame:
+def changelog_diff(old: DataFrame, new: DataFrame, key: str, seq: str) -> DataFrame:
     """Net row changes between two keyed states (one row per key each;
     ``seq`` is the per-key row version — strictly increasing under CDC,
     so seq equality ⇔ the row is unchanged).
@@ -304,10 +298,8 @@ def changelog_diff(
     Plan shape (the sort-free diff): classification runs on SLIM
     (key, seq, side) rows — one union + one fixed-width HashAggregate, no
     full-outer SortMergeJoin of the wide payloads; the payloads join back
-    once per CHANGED key only. ``broadcast_keys`` broadcasts the
-    changed-key sides (right for version-adjacent changelogs, where
-    changes ≈ one batch); disable when diffing distant versions at
-    cluster scale — AQE then picks shuffled hash joins keyed on ``key``.
+    once per CHANGED key only, with the changed-key sides broadcast
+    (right when the changes are about one batch).
     """
     payload = [c for c in new.columns]
     tagged = old.select(
@@ -330,10 +322,8 @@ def changelog_diff(
     del_keys = cls.filter(F.col("__sn").isNull()).select(
         key, F.lit("delete").alias("_change_type")
     )
-    if broadcast_keys:
-        new_keys, del_keys = F.broadcast(new_keys), F.broadcast(del_keys)
-    return new.join(new_keys, key).select(*payload, "_change_type").unionByName(
-        old.join(del_keys, key).select(*payload, "_change_type")
+    return new.join(F.broadcast(new_keys), key).select(*payload, "_change_type").unionByName(
+        old.join(F.broadcast(del_keys), key).select(*payload, "_change_type")
     )
 
 
@@ -569,46 +559,72 @@ class IceTable:
             out = out.unionByName(p)
         return out
 
-    def _merge_mor(
-        self, base: "DataFrame | None", deltas: DataFrame, key: str, seq: str
-    ) -> DataFrame:
-        """Merge-on-read view: latest row per key across base ∪ deltas
-        (hash-agg max + join-back — the same sort-free dedup plan the CDC
-        batch path uses), delete tombstones dropped. The maxes side spans
-        the WHOLE key set, so it is NOT broadcast — AQE picks a shuffled
-        hash join co-partitioned on the key.
+    def _read_versions(
+        self, files: list[dict], schema: T.StructType
+    ) -> "DataFrame | None":
+        """Every physical row of `files` as a row VERSION: the payload
+        cast-projected to `schema`, plus ``__op`` (base rows are upserts)
+        and ``__prio`` — the tie class at equal seq, base=0 < delta-U=1 <
+        delta-D=2, so a delta beats the base row it superseded and a
+        tombstone beats an upsert. None when `files` is empty."""
+        parts = []
+        base = self._read_projected([f for f in files if not f.get("delta")], schema)
+        if base is not None:
+            parts.append(base.withColumn("__op", F.lit("U")).withColumn("__prio", F.lit(0)))
+        deltas = self._read_projected(
+            [f for f in files if f.get("delta")], schema, with_op=True
+        )
+        if deltas is not None:
+            parts.append(deltas.withColumn(
+                "__prio", F.when(F.col("__op") == "D", F.lit(2)).otherwise(F.lit(1))
+            ))
+        if not parts:
+            return None
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
-        (key, seq) ties are broken AFTER the join-back so merge_into
-        stays idempotent like the COW path: a delta row beats the base
-        row it superseded, and a delete tombstone beats an upsert at the
-        same seq (priority classes base=0 < delta-U=1 < delta-D=2 —
-        side-priority max reusing the (key, seq) partitioning, no extra
-        shuffle), and surviving exact ties (the same delta delivered
-        twice without a batch-id fence) collapse to one row per key.
+    @staticmethod
+    def _latest(cols: list, key: str, seq: str, where=None):
+        """``max_by`` aggregate picking a key's latest row version among
+        `_read_versions` rows (only rows where `where` holds, if given):
+        the highest seq, then the highest tie class. Its value is the
+        struct of the non-key `cols` plus ``__op``; exact duplicates
+        collapse to one pick. Callers drop NULL-key and NULL-seq rows
+        first: such a row identifies no version."""
+        order = F.struct(seq, "__prio")
+        return F.max_by(
+            F.struct(*[c for c in cols if c != key], "__op"),
+            order if where is None else F.when(where, order),
+        )
+
+    def _merge_mor(self, rows: DataFrame, key: str, seq: str) -> DataFrame:
+        """Merge-on-read view of `_read_versions` rows: the latest row per
+        key, delete tombstones dropped, columns in schema order.
+
+        ONE aggregate — ``groupBy(key)`` over a ``max_by`` of the non-key
+        payload ordered by (seq, tie class) — so the plan holds a single
+        hash exchange on the key and no join-back. The struct-valued
+        buffer is not fixed-width, so Spark plans it as a SortAggregate
+        (a sort within each shuffle partition), not a HashAggregate.
+
+        Tie rules (they keep merge_into idempotent like the COW path): a
+        delta row beats the base row it superseded, a tombstone beats an
+        upsert at the same seq, and exact duplicates (the same delta
+        delivered twice without a batch-id fence) collapse to one row.
         Producer contract: `seq` is a total order per key (binlog
         position), so two DIFFERENT upsert payloads never legitimately
         share (key, seq); if a producer violates that, the D-beats-U rule
         still resolves mixed ties deterministically and only same-op
-        distinct-payload ties fall to an arbitrary pick. Every aggregate
-        here is a HashAggregate over scalar columns — no SortAggregate in
-        the read path."""
-        all_rows = deltas.withColumn(
-            "__prio",
-            F.when(F.col("__op") == "D", F.lit(2)).otherwise(F.lit(1)),
-        )
-        if base is not None:
-            all_rows = base.withColumn("__op", F.lit("U")).withColumn(
-                "__prio", F.lit(0)
-            ).unionByName(all_rows)
-        maxes = all_rows.groupBy(key).agg(F.max(seq).alias(seq))
-        cand = all_rows.join(maxes, [key, seq])
-        best = cand.groupBy(key, seq).agg(F.max("__prio").alias("__bestprio"))
+        distinct-payload ties fall to an arbitrary pick."""
+        cols = [c for c in rows.columns if c not in ("__op", "__prio")]
         latest = (
-            cand.join(best, [key, seq])
-            .filter(F.col("__prio") == F.col("__bestprio"))
-            .dropDuplicates([key])
+            rows.filter(F.col(key).isNotNull() & F.col(seq).isNotNull())
+            .groupBy(key)
+            .agg(self._latest(cols, key, seq).alias("__r"))
+            .filter(F.col("__r.__op") != "D")
         )
-        return latest.filter(F.col("__op") != "D").drop("__op", "__prio", "__bestprio")
+        return latest.select(
+            *[F.col(key) if c == key else F.col("__r").getField(c).alias(c) for c in cols]
+        )
 
     def read(self, version: "int | None" = None) -> DataFrame:
         """Snapshot read; old-schema files are cast-projected to the
@@ -616,51 +632,29 @@ class IceTable:
         snap = self.snapshot(version)
         return self._read_state(snap)
 
-    def _read_state(
-        self,
-        snap: dict,
-        buckets: "set[int] | None" = None,
-        schema: "T.StructType | None" = None,
-        bucket_space: "int | None" = None,
-    ) -> DataFrame:
+    def _read_state(self, snap: dict, buckets: "set[int] | None" = None) -> DataFrame:
         """Materialized state of a snapshot (MOR base+delta merge applied),
-        optionally restricted to ``buckets`` and cast-projected to an
-        override ``schema`` (used by changes() to diff across a schema
-        evolution in the TO version's shape). ``bucket_space`` is the
-        modulus the ``buckets`` ids live in (default: this snapshot's own
-        bucket count) — changes() passes the TO version's count so a diff
-        across a rebucket speaks one bucket language.
+        optionally restricted to ``buckets`` of its own bucket space.
 
         When the selection includes a file from an older bucket
         generation (pre-rebucket), that file also carries rows of buckets
         OUTSIDE the selection; a row-level residue filter drops them
         BEFORE the MOR merge so a partial file set never fabricates a
         stale merged row."""
-        schema = schema if schema is not None else T.StructType.fromJson(snap["schema"])
+        schema = T.StructType.fromJson(snap["schema"])
         spec = snap["spec"]
         files = snap["files"]
-        row_filter = None
+        m = spec["num_buckets"]
         if buckets is not None:
-            default_n = spec["num_buckets"]
-            m = bucket_space if bucket_space is not None else default_n
-            files = _files_covering(files, buckets, m, default_n)
-            if any(_entry_gen(f, default_n) != m for f in files):
-                row_filter = self._bucket_expr(spec["key"], m).isin(
-                    [int(b) for b in sorted(buckets)]
-                )
-        if not files:
+            files = _files_covering(files, buckets, m, m)
+        rows = self._read_versions(files, schema)
+        if rows is None:
             return self.spark.createDataFrame([], schema)
-        base_files = [f for f in files if not f.get("delta")]
-        delta_files = [f for f in files if f.get("delta")]
-        base = self._read_projected(base_files, schema)
-        if base is not None and row_filter is not None:
-            base = base.filter(row_filter)
-        if not delta_files:
-            return base if base is not None else self.spark.createDataFrame([], schema)
-        deltas = self._read_projected(delta_files, schema, with_op=True)
-        if row_filter is not None:
-            deltas = deltas.filter(row_filter)
-        return self._merge_mor(base, deltas, spec["key"], spec.get("seq", "event_seq"))
+        if buckets is not None and any(_entry_gen(f, m) != m for f in files):
+            rows = rows.filter(self._bucket_expr(spec["key"], m).isin(sorted(buckets)))
+        if not any(f.get("delta") for f in files):
+            return rows.drop("__op", "__prio")
+        return self._merge_mor(rows, spec["key"], spec.get("seq", "event_seq"))
 
     def scan(
         self,
@@ -752,25 +746,28 @@ class IceTable:
                 cond = cond & (col == F.lit(v))
         return out.filter(cond)
 
-    def changes(
-        self,
-        from_version: int,
-        to_version: "int | None" = None,
-        broadcast_keys: bool = True,
-    ) -> DataFrame:
+    def changes(self, from_version: int, to_version: "int | None" = None) -> DataFrame:
         """Incremental changelog read (the CDF twin of time travel): net
         row changes between two committed versions, as the TO version's
         payload columns + ``_change_type`` ∈ {insert, update_postimage,
         delete} (deletes carry the preimage, cast-projected to the TO
-        schema across evolutions).
+        schema across evolutions; an update is a key live in both
+        versions whose seq differs).
 
-        Scale design — cost ∝ churn, never table size: data files are
-        immutable, so a bucket whose file set is IDENTICAL in both
-        snapshots cannot have changed; only churned buckets are read and
-        diffed (COW rewrites touched buckets, MOR appends per-bucket
-        deltas — both churn exactly the buckets that changed). The diff
-        itself is the sort-free slim-classification plan of
-        ``changelog_diff``."""
+        Cost ∝ churned buckets, not table size: data files are immutable,
+        so a bucket whose file set is IDENTICAL in both snapshots cannot
+        have changed, and only files covering a churned bucket are read.
+        The unit is the bucket, not the row — a batch that touches every
+        bucket makes the poll read every bucket's files.
+
+        One pass, one aggregate: the selected files are read once, in
+        three groups — only in FROM, only in TO, in both — each tagged
+        with the versions it belongs to (``__in1``/``__in2``). One
+        ``groupBy(key)`` computes the FROM and TO rows as two filtered
+        latest-version ``max_by``s (the same tie rules as ``_merge_mor``;
+        copy-on-write base rows are simply tie class 0), and each key is
+        classified from the pair. Neither state is materialized or
+        joined back."""
         snap1 = self.snapshot(from_version)
         snap2 = self.snapshot(to_version)
         if snap2["version"] < snap1["version"]:
@@ -793,10 +790,58 @@ class IceTable:
             else:
                 churned |= _entry_buckets(paths2[p], m, m)
         schema = T.StructType.fromJson(snap2["schema"])
-        old = self._read_state(snap1, buckets=churned, schema=schema, bucket_space=m)
-        new = self._read_state(snap2, buckets=churned)
-        return changelog_diff(
-            old, new, spec["key"], spec.get("seq", "event_seq"), broadcast_keys
+        key, seq = spec["key"], spec.get("seq", "event_seq")
+        sel1 = _files_covering(snap1["files"], churned, m, n1)
+        sel2 = _files_covering(snap2["files"], churned, m, m)
+        parts = []
+        for files, in1, in2 in (
+            ([f for f in sel1 if f["path"] not in paths2], True, False),
+            ([f for f in sel2 if f["path"] not in paths1], False, True),
+            ([f for f in sel2 if f["path"] in paths1], True, True),
+        ):
+            rows = self._read_versions(files, schema)
+            if rows is not None:
+                parts.append(rows.withColumn("__in1", F.lit(in1)).withColumn("__in2", F.lit(in2)))
+        if not parts:
+            return self.spark.createDataFrame(
+                [], T.StructType(schema.fields + [T.StructField("_change_type", T.StringType())])
+            )
+        rows = parts[0]
+        for p in parts[1:]:
+            rows = rows.unionByName(p)
+        # legacy-generation files also hold rows of unchurned buckets,
+        # whose other files were not selected: drop those rows
+        if any(_entry_gen(f, n1) != m for f in sel1) or any(_entry_gen(f, m) != m for f in sel2):
+            rows = rows.filter(self._bucket_expr(key, m).isin(sorted(churned)))
+        cols = schema.fieldNames()
+        pair = (
+            rows.filter(F.col(key).isNotNull() & F.col(seq).isNotNull())
+            .groupBy(key)
+            .agg(
+                self._latest(cols, key, seq, where=F.col("__in1")).alias("__o"),
+                self._latest(cols, key, seq, where=F.col("__in2")).alias("__n"),
+            )
+        )
+        # a tombstone (or no row) on a side means the key is absent there
+        o_live = F.coalesce(F.col("__o.__op") != "D", F.lit(False))
+        n_live = F.coalesce(F.col("__n.__op") != "D", F.lit(False))
+        change = (
+            F.when(o_live & ~n_live, F.lit("delete"))
+            .when(~o_live & n_live, F.lit("insert"))
+            .when(o_live & n_live & (F.col("__o").getField(seq) != F.col("__n").getField(seq)),
+                  F.lit("update_postimage"))
+        )
+        out = (
+            pair.withColumn("_change_type", change)
+            .filter(F.col("_change_type").isNotNull())
+            .withColumn(
+                "__img",
+                F.when(F.col("_change_type") == "delete", F.col("__o")).otherwise(F.col("__n")),
+            )
+        )
+        return out.select(
+            *[F.col(key) if c == key else F.col("__img").getField(c).alias(c) for c in cols],
+            "_change_type",
         )
 
     def _split_rewrite_files(
@@ -1081,6 +1126,7 @@ class IceTable:
         lineage: "dict | None" = None,
         probe_df: "DataFrame | None" = None,
         probe_rows: "list[tuple] | None" = None,
+        probe_buckets: "int | None" = None,
     ) -> "int | None":
         """Copy-on-write MERGE: `updates` has one row per key with op I/U/D
         (pre-deduped by the caller); I/U upsert the payload, D deletes.
@@ -1102,6 +1148,11 @@ class IceTable:
         runs over the raw batch). Skips the probe job entirely; the
         anti-join keys then come from ``probe_df`` (which is NOT
         executed as a second full plan — pass a slim raw projection).
+        ``probe_buckets`` is the bucket count the rows' bucket ids were
+        computed under (required with ``probe_rows``): on any attempt
+        whose snapshot has a different count — a rebucket committed
+        after the caller's aggregate — the rows are discarded and the
+        merge runs its own probe in the snapshot's bucket space.
 
         Returns the committed version (None for an empty batch; unchanged
         version when the batch id is fenced).
@@ -1123,6 +1174,10 @@ class IceTable:
         U/D tie deterministically (tombstone wins) and a same-op
         distinct-payload tie arbitrarily.
         """
+        if probe_rows is not None and probe_buckets is None:
+            raise ValueError(
+                "probe_rows needs probe_buckets, the bucket count they were computed under"
+            )
         if self.snapshot()["spec"].get("write_mode", "cow") == "mor":
             return self._merge_into_mor(updates, batch_id, source, op_col, lineage)
         for _ in range(MAX_COMMIT_RETRIES):
@@ -1148,7 +1203,7 @@ class IceTable:
             # the probe job disappears entirely.
             probe = probe_df if probe_df is not None else updates
             pk = None
-            if probe_rows is not None:
+            if probe_rows is not None and probe_buckets == num_buckets:
                 bucket_rows = [
                     {"__bucket": b, "__lo": lo, "__hi": hi}
                     for (b, lo, hi) in probe_rows
@@ -1324,22 +1379,10 @@ class IceTable:
                         all_files, compact, num_buckets, num_buckets
                     )
                 }
-                base = self._read_projected(
-                    [
-                        f for f in snap["files"]
-                        if not f.get("delta") and f["path"] in removed_paths
-                    ],
-                    schema,
+                rows = self._read_versions(
+                    [f for f in all_files if f["path"] in removed_paths], schema
                 )
-                deltas = self._read_projected(
-                    [
-                        f for f in list(snap["files"]) + entries
-                        if f.get("delta") and f["path"] in removed_paths
-                    ],
-                    schema,
-                    with_op=True,
-                )
-                merged = self._merge_mor(base, deltas, key, seq)
+                merged = self._merge_mor(rows, key, seq)
                 comp_entries = self._write_data_files(
                     merged, key, num_buckets, snap["schema_version"]
                 )
@@ -1455,22 +1498,10 @@ class IceTable:
                 f["path"] for f in _files_covering(snap["files"], todo, m, m)
             }
             schema = T.StructType.fromJson(snap["schema"])
-            base = self._read_projected(
-                [
-                    f for f in snap["files"]
-                    if not f.get("delta") and f["path"] in removed_paths
-                ],
-                schema,
+            rows = self._read_versions(
+                [f for f in snap["files"] if f["path"] in removed_paths], schema
             )
-            deltas = self._read_projected(
-                [
-                    f for f in snap["files"]
-                    if f.get("delta") and f["path"] in removed_paths
-                ],
-                schema,
-                with_op=True,
-            )
-            merged = self._merge_mor(base, deltas, spec["key"], spec.get("seq", "event_seq"))
+            merged = self._merge_mor(rows, spec["key"], spec.get("seq", "event_seq"))
             entries = self._write_data_files(
                 merged, spec["key"], m, snap["schema_version"]
             )

@@ -392,6 +392,7 @@ class CdcPipeline:
             lineage=lineage,
             probe_df=batch_df.select("doc_id"),
             probe_rows=probe_rows,
+            probe_buckets=t_buckets,
         )
         if version is None:
             return None  # empty batch: nothing merged, nothing committed

@@ -18,10 +18,14 @@ read, in availableNow form:
   resumes without double-applying (the same fence discipline the ingest
   path uses — streaming/cdc.py).
 
-Scale notes: a poll is one driver-side metadata diff + a churn-bounded
-read; nothing here scales with table size. Consumers that fall behind N
-versions pay ONE net diff over the whole range (not N diffs) because
-``changes()`` nets internally — interposing snapshots collapse.
+Scale notes: a poll is one driver-side metadata diff + a read of every
+file covering a churned BUCKET, aggregated once per key. Pruning is per
+bucket, not per row: a batch of 100 uniformly hashed keys touches every
+bucket of an 8-bucket table, and then the poll reads the whole table.
+Tables that are polled often want more buckets than a batch has keys.
+Consumers that fall behind N versions pay ONE net diff over the whole
+range (not N diffs) because ``changes()`` nets internally — interposing
+snapshots collapse.
 
 Reference scope anchor: the reference plugin is a per-record filter
 inside someone else's pipeline (TimestampFormatFilterPlugin.java:142

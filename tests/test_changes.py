@@ -88,18 +88,23 @@ def test_changes_reads_only_churned_buckets(spark, tmp_path, monkeypatch):
     table.merge_into(payload(["d0"], seq=2), batch_id=1)
     v2 = table.current_version()
 
+    paths1 = {e["path"] for e in table.snapshot(v1)["files"]}
+    churned = {e["bucket"] for e in table.snapshot(v2)["files"] if e["path"] not in paths1}
+    assert len(churned) == 1
+
     seen = []
-    orig = IceTable._read_state
+    orig = IceTable._read_projected
 
-    def spy(self, snap, buckets=None, schema=None, **kw):
-        seen.append(buckets)
-        return orig(self, snap, buckets=buckets, schema=schema, **kw)
+    def spy(self, files, *a, **kw):
+        seen.extend(files)
+        return orig(self, files, *a, **kw)
 
-    monkeypatch.setattr(IceTable, "_read_state", spy)
+    monkeypatch.setattr(IceTable, "_read_projected", spy)
     got = {r["doc_id"]: r["_change_type"] for r in table.changes(v1, v2).collect()}
     assert got == {"d0": "update_postimage"}
-    # both state reads were restricted to the single churned bucket
-    assert len(seen) == 2 and all(b is not None and len(b) == 1 for b in seen)
+    # every file read covers the one churned bucket: the bucket's old
+    # file (FROM side) and its rewrite (TO side), nothing else
+    assert len(seen) == 2 and {e["bucket"] for e in seen} == churned
 
 
 def test_changes_across_schema_evolution(spark, tmp_path):
@@ -246,3 +251,48 @@ def test_codec_table_property_applies_to_data_files(spark, tmp_path):
     t_zstd.append(df)
     assert file_codecs(t_zstd) == {"ZSTD"}
     assert t_zstd.read().count() == 50
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_changes_nets_churn_inside_the_range(spark, tmp_path, mode):
+    """A key deleted and re-upserted inside the range is an update (its
+    seq moved); a key inserted then deleted inside the range emits
+    nothing."""
+    table = IceTable.create(
+        spark, str(tmp_path / f"t_net_{mode}"), TARGET_SCHEMA, key="doc_id",
+        num_buckets=4, write_mode=mode,
+    )
+
+    def batch(rows, op):
+        data = [(d, [1], 1, "s", None, None, None, q) for d, q in rows]
+        return spark.createDataFrame(data, TARGET_SCHEMA).withColumn("op", F.lit(op))
+
+    table.merge_into(batch([("a", 1), ("keep", 1)], "U"), batch_id=0)
+    v1 = table.current_version()
+    table.merge_into(batch([("a", 2)], "D"), batch_id=1)
+    table.merge_into(batch([("a", 3), ("b", 3)], "U"), batch_id=2)
+    table.merge_into(batch([("b", 4)], "D"), batch_id=3)
+    got = {r["doc_id"]: (r["_change_type"], r["event_seq"]) for r in table.changes(v1).collect()}
+    assert got == {"a": ("update_postimage", 3)}
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_changes_across_rebucket_and_migration(spark, binlog_dir, tmp_path, mode):
+    """A range spanning a rebucket, the migration of every legacy file
+    and later merges (FROM holds only old-generation files, TO only
+    new-generation ones) equals the state diff."""
+    table = IceTable.create(
+        spark, str(tmp_path / f"t_mig_{mode}"), TARGET_SCHEMA, key="doc_id",
+        num_buckets=4, write_mode=mode, compact_threshold=50, compact_jitter=0,
+    )
+    pipe = CdcPipeline(spark, table)
+    chunks = _chunks(binlog_dir)
+    pipe.replay_chunks(chunks[:2])
+    v1 = table.current_version()
+    table.rebucket(8)
+    assert table.migrate_buckets() is not None
+    pipe.replay_chunks(chunks[2:], start_batch=2)
+    v2 = table.current_version()
+
+    truth = _truth_diff(_state(table, v1), _state(table, v2))
+    assert _got_diff(table, v1, v2) == truth and truth

@@ -224,3 +224,47 @@ def test_mor_same_seq_mixed_op_tie_tombstone_wins(spark, tmp_path):
         mor.merge_into(batches[order[0]], batch_id=None)
         mor.merge_into(batches[order[1]], batch_id=None)
         assert mor.read().collect() == []
+
+
+def test_mor_null_seq_rows_never_win(spark, tmp_path):
+    """The latest-version aggregate skips NULL-seq rows: a key whose only
+    rows have a NULL seq stays absent, and a NULL-seq row never beats a
+    row with a seq — in the read, the change feed and compaction."""
+    mor = _table(spark, tmp_path, "mor_nullseq", write_mode="mor", compact_threshold=100)
+    v0 = mor.current_version()
+    mor.merge_into(_upserts(spark, [("d1", [1], None), ("d2", [2], 5)]), batch_id=0)
+    mor.merge_into(_upserts(spark, [("d1", [3], None), ("d2", [4], None)]), batch_id=1)
+    want = {"d2": ((2,), 1, 5)}
+    assert _rows(mor) == want
+    assert {r["doc_id"]: r["_change_type"] for r in mor.changes(v0).collect()} == {"d2": "insert"}
+    mor.compact()
+    assert _rows(mor) == want
+
+
+def _exchanges(df):
+    """(hash exchanges, broadcast exchanges) in df's executed plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan only, not the initial one too
+    text = plan.toString()
+    return text.count("Exchange hashpartitioning"), text.count("BroadcastExchange")
+
+
+def test_mor_read_plans_hold_one_exchange(spark, binlog_dir, tmp_path):
+    """MOR read(), MOR scan() and changes() each resolve the latest row
+    per key with ONE aggregate: one hash exchange on the key, no
+    broadcast join-back."""
+    t = _table(spark, tmp_path, "mor_shape", write_mode="mor", compact_threshold=100)
+    pipe = CdcPipeline(spark, t)
+    chunks = _chunks(binlog_dir)
+    pipe.replay_chunks(chunks[:2])
+    t.compact()  # base files + delta files from here on
+    v1 = t.current_version()
+    pipe.replay_chunks(chunks[2:], start_batch=2)
+    files = t.snapshot()["files"]
+    assert any(f.get("delta") for f in files) and not all(f.get("delta") for f in files)
+
+    assert _exchanges(t.read()) == (1, 0)
+    assert _exchanges(t.scan([("event_seq", ">=", N_EVENTS // 2)])) == (1, 0)
+    assert _exchanges(t.changes(v1)) == (1, 0)

@@ -293,3 +293,47 @@ def test_compaction_folds_legacy_deltas(spark, binlog_dir, tmp_path):
     assert all(_entry_gen(f, 8) == 8 for f in snap["files"])
     assert _state(table) == before
     assert table.changes(v_pre, v).count() == 0
+
+
+def test_cdc_probe_rows_discarded_after_concurrent_rebucket(spark, tmp_path, monkeypatch):
+    """CdcPipeline hands merge_into the touched buckets and key envelopes
+    of its stats aggregate (probe_rows), computed under the bucket count
+    it read. A rebucket committed between that aggregate and the commit
+    must make the merge discard them: read as ids of the NEW bucket space
+    they name the wrong buckets, the envelope pass carries the file that
+    holds the batch key, and the key ends up with a stale duplicate."""
+    from embulk_filter_timestamp_format_spark.sources.binlog import binlog_events
+
+    table = IceTable.create(
+        spark, str(tmp_path / "t"), TARGET_SCHEMA, key="doc_id", num_buckets=8
+    )
+    table.merge_into(_payload(spark, [f"d{i}" for i in range(20)], seq=1), batch_id=0)
+    # a key whose 8-bucket id does not exist in the 4-bucket space
+    hot = next(
+        r["doc_id"]
+        for r in table.read().select(
+            "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("b")
+        ).orderBy("doc_id").collect()
+        if r["b"] >= 4
+    )
+    raw = binlog_events(spark, 1, 1).select(
+        "offset", F.lit("U").alias("op"), F.lit(hot).alias("doc_id"),
+        F.lit(100).cast("long").alias("event_seq"), "event_time_str",
+        "event_time_ms", "event_time_sec", "tokens", "n_tok", "source",
+    )
+
+    raced = []
+    orig = IceTable.merge_into
+
+    def merge_after_rebucket(self, *a, **kw):
+        if not raced:  # a concurrent writer commits a rebucket first
+            raced.append(IceTable.load(self.spark, self.root).rebucket(4))
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(IceTable, "merge_into", merge_after_rebucket)
+    CdcPipeline(spark, table, source_name="ingest").apply_batch(raw, 1)
+
+    assert raced and table.snapshot()["spec"]["num_buckets"] == 4
+    rows = table.read().select("doc_id", "event_seq").collect()
+    assert len(rows) == 20
+    assert {r["doc_id"]: r["event_seq"] for r in rows}[hot] == 100
